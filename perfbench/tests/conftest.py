@@ -1,0 +1,10 @@
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+BENCH = os.path.dirname(HERE)
+ROOT = os.path.dirname(BENCH)
+sys.path[:0] = [BENCH, ROOT]
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+)
